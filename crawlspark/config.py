@@ -67,46 +67,21 @@ class CrawlConfig:
     # seen-set crosses this many rows (one-time backfill mark): below it
     # the exact anti-join is cheaper than the probe/mark jobs the bloom
     # adds per wave; at 10^8+ seen rows the prefilter is the win
-    seen_join_shape: str = "anti"  # verify-join shape once the prefilter
-    # is active (VERDICT r07 #2). "anti" (default) = maybe ⋉̸ seen,
-    # the fastest measured shape on local/single-node at every seen
-    # size (seen_scan_bench part A: in-memory shuffle ≈ memcpy, so the
-    # SMJ's seen shuffle costs less than the semi shape's extra job).
-    # "semi" = hits := seen ⋉ maybe-keys, then probed ⋉̸ hits — the
-    # seen side is SCANNED (one pruned column) but never shuffled or
-    # sorted: the shape for network-shuffle-bound clusters when the
-    # seen store isn't bucketed. For the 10^10 regime use
-    # seen_layout="bucketed" instead (flat in seen size, dominates
-    # both). Output identical across all of them, pinned by
-    # test_seen_join_shape_equality / test_seen_layout_bucketed_*.
     seen_layout: str = "slices"  # where the verify join reads the seen
     # history from (VERDICT r07 #2). "slices" (default) = union of the
-    # committed frontier parquet slices. "bucketed" = a catalog table
-    # of (url_key, m) bucketed on url_key, rebuilt from committed
-    # slices on first use per run and appended per wave: the verify
-    # join then runs as a shuffled-hash semi join building on the
-    # wave-bounded side, so the seen history is never exchanged OR
-    # sorted at ANY size — measured flat in seen size
-    # (scripts/seen_scan_bench.py: 1.04 s at 8M -> 1.09 s at 32M seen
-    # keys vs 1.12 -> 2.89 for the slice anti-join). The table is a
-    # cache; exactness never depends on it (reads filter to committed
-    # manifest waves, rebuild-on-first-use absorbs crashes/expiry).
+    # committed frontier parquet slices, verified with a plain anti
+    # join (maybe ⋉̸ seen) — fastest locally at every measured seen
+    # size. "bucketed" = a catalog table of (url_key, m) bucketed on
+    # url_key, rebuilt from committed slices on first use per run and
+    # appended per wave: the verify join then builds a shuffled hash
+    # on the wave-bounded side (seen ⋉ maybe-keys, then ⋉̸ the hits),
+    # so the seen history is never exchanged OR sorted at ANY size —
+    # measured flat in seen size (scripts/seen_scan_bench.py: 1.04 s
+    # at 8M -> 1.09 s at 32M seen keys vs 1.12 -> 2.89 for the slice
+    # anti join). The table is a cache; exactness never depends on it
+    # (reads filter to committed manifest waves, rebuild-on-first-use
+    # absorbs crashes/expiry).
     seen_buckets: int = 32  # bucket count for seen_layout="bucketed"
-    budget_plan: str = "iterative"  # budgeted sub-wave scheduling (r8).
-    # "iterative" (default) = re-rank + stage the deferred remainder
-    # per sub-wave — measured fastest-or-equal on local/single node
-    # (BASELINE.md r8: 1,749 vs 1,742 URLs/s serial, 5,296 vs 5,075 on
-    # 8 cores, both within the noise envelope). "rank_once" = stage
-    # the whole politeness plan once per wave (_subwave = rank window;
-    # robots UDF evaluated once per WAVE) and run each sub-wave as a
-    # filtered read — no per-sub-wave shuffle/sort of the remaining
-    # frame and no per-sub-wave gate join, the terms that grow with
-    # wave size × sub-wave count at 10^10 (the scale shape, like
-    # seen_layout="bucketed"). Identical politeness contract and
-    # emitted output (tests parametrize both). per_host_budget_exact
-    # always uses the iterative loop (its rotating remainder window
-    # has no closed rank form); a mid-wave resume honors whichever
-    # format the store was checkpointed under.
     per_host_budget: int | None = None  # max fetches per host per wave (None = unlimited)
     fetch_broadcast_rows: int = 500_000  # politeness sub-waves >= 1 are
     # all-allowed, so their fetch join is INNER and can build on the
@@ -126,19 +101,18 @@ class CrawlConfig:
     per_host_budget_exact: bool = False
     pacing_enabled: bool = False  # real sleeps in the fetch stage (off in tests)
     detailed_metrics: bool = True  # per-wave candidate counts (extra job; bench turns off)
-    robots_broadcast: bool = True  # hint broadcast for the rules join; False at 10^7+ hosts
     # collect the robots table into a Python-side broadcast dict when
     # it has at most this many rows (bounded probe at construction),
     # replacing the per-wave rules join + JVM broadcast build with a
     # closure lookup inside the one gate UDF (r05, VERDICT r04 #4 —
     # ~0.2-0.3 s/wave of fixed broadcast-job cost on small-wave
     # crawls). 0 disables; large robots tables keep the join, which
-    # is the 10^7-host scale path. Both bounds must pass: row count
+    # is the 10^7-host scale path (unhinted: AQE broadcasts the rules
+    # table when it is small). Both bounds must pass: row count
     # AND total robots-body bytes (code-review r05 — 50k rows of
     # 500KB bodies would be a 20GB+ driver collect).
     robots_local_threshold: int = 50_000
     robots_local_max_bytes: int = 64 * 1024 * 1024
-    # (AQE still picks broadcast when the rules table is small enough)
     parse_partitions: int | None = None  # row-parallelism CAP of the parse
     # stage; None -> shuffle_partitions. CPU-bound Python stages balance
     # best at ~2-3 tasks/core on BIG waves (measured +20-40% on the wide

@@ -5,9 +5,8 @@ the rules-JOIN path — the shape that actually runs at 10^7-distinct-
 host scale, where the rules table no longer fits a driver collect —
 never gets its own measured number. This script times EXACTLY that
 path: a synthetic frontier of N distinct hosts gated against an
-N-host rules table with robots_local_threshold=0 (join pinned on; as
-of r06 an explicitly passed robots_side also pins it), no fetch, no
-parse, no store.
+N-host rules table with robots_local_threshold=0 (join pinned on), no
+fetch, no parse, no store.
 
     python scripts/robots_join_bench.py [n_hosts] [frontier_rows]
 
@@ -17,8 +16,9 @@ Prints ONE JSON line:
    "rows_gated", "urls_per_sec", "join_node", "plan_ok"}
 
 plan_ok asserts the physical plan shape the scale path must have:
-a real join on (r_scheme, r_host) — BroadcastHashJoin under the
-default broadcast hint, SortMergeJoin/ShuffledHashJoin without it —
+a real join on (r_scheme, r_host) — the join is unhinted, so the
+planner picks BroadcastHashJoin only while the rules table is under
+the broadcast threshold, SortMergeJoin/ShuffledHashJoin past it —
 exactly ONE ArrowEvalPython (the gate UDF), and NO driver collect of
 the rules (the collected-robots path is disabled).
 """
@@ -45,22 +45,15 @@ def main():
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import FRONTIER_SCHEMA, SparkCrawler
 
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("robots-join-bench")
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.ui.enabled", "false")
         .config("spark.locality.wait", "0")
         .config("spark.driver.memory", "8g")
+        .getOrCreate()
     )
-    if os.environ.get("CRAWLSPARK_ROBOTS_BROADCAST", "1") == "0":
-        # the 10^7+-host shape: rules too big to broadcast — kill the
-        # planner AND AQE auto-broadcast so the shuffle join actually
-        # materializes at this (broadcastable) test scale
-        builder = builder.config(
-            "spark.sql.autoBroadcastJoinThreshold", "-1"
-        ).config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     # rules: every host has a row; half disallow a path prefix, the
@@ -115,10 +108,6 @@ def main():
         MaxDepth=1,
         robots_local_threshold=0,  # PIN the join path
         shuffle_partitions=int(CPUS),
-        # CRAWLSPARK_ROBOTS_BROADCAST=0 measures the no-hint shape
-        # (SortMergeJoin) — the 10^7+-host configuration where the
-        # rules table is too big to broadcast
-        robots_broadcast=os.environ.get("CRAWLSPARK_ROBOTS_BROADCAST", "1") != "0",
     )
     pages_stub = spark.createDataFrame(
         [], "url string, status_code int, status string, proto string, "

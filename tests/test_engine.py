@@ -222,21 +222,18 @@ def test_resume_mid_crawl(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("mode", ["iterative", "rank_once"])
-def test_budget_defer_preserves_sets(spark, tmp_path, mode):
+def test_budget_defer_preserves_sets(spark, tmp_path):
     """per-host politeness budget defers, never drops: same emitted
-    multiset + seen-set as unbudgeted (SURVEY.md §7.3) — under both
-    sub-wave schedulers (the r8 rank-once plan and the iterative
-    loop), with the hot-host salt-split active."""
+    multiset + seen-set as unbudgeted (SURVEY.md §7.3), with the
+    hot-host salt-split active."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                      per_host_budget=3, hot_host_salt_threshold=5,
-                      budget_plan=mode)
+                      per_host_budget=3, hot_host_salt_threshold=5)
     crawler = SparkCrawler(
         spark, cfg,
         testkit.pages_to_spark(spark, pages_pdf),
         testkit.robots_to_spark(spark, robots_pdf),
-        workdir=str(tmp_path / f"budget-{mode}"),
+        workdir=str(tmp_path / "budget"),
     )
     crawler.run()
     _assert_match(crawler, _oracle_run(cfg, pages_pdf, robots_pdf))
@@ -244,58 +241,6 @@ def test_budget_defer_preserves_sets(spark, tmp_path, mode):
     # wave 2 has 4 -> at least 2 subwaves
     metrics = {m["wave"]: m for m in crawler.store.metrics() if m["wave"] >= 0}
     assert metrics[2]["subwaves"] >= 2
-
-
-def test_budget_plan_contract(spark, tmp_path):
-    """The rank-once plan (r8) satisfies the politeness contract the
-    iterative loop guaranteed: per (host, salt slice, sub-wave) take
-    <= slice budget, blocked rows all in sub-wave 0, every row
-    assigned, sub-wave indexes contiguous from 0 — including with the
-    hot-host salt-split active."""
-    from pyspark.sql import functions as F
-
-    from crawlspark.schema import FRONTIER_SCHEMA
-
-    B, THRESH = 3, 10
-    hosts = {"hot.test": 25, "warm.test": 7, "cold.test": 2}
-    rows = []
-    for h, n in hosts.items():
-        for i in range(n):
-            u = f"http://{h}/p{i:03d}"
-            rows.append((u, u, 1, 2, None))
-    frontier = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-    cfg = CrawlConfig(From=["http://hot.test/"], MaxDepth=1,
-                      per_host_budget=B, hot_host_salt_threshold=THRESH)
-    pages = testkit.pages_to_spark(
-        spark, testkit.nice_site(branching=2, max_id_len=2)[0]
-    )
-    robots = spark.createDataFrame(
-        [("http", h, 404, "") for h in hosts],
-        "scheme string, host string, status_code int, body string",
-    )
-    c = SparkCrawler(spark, cfg, pages, robots,
-                     workdir=str(tmp_path / "planned"))
-    gated = c._gate(frontier)
-    # block one host entirely: its rows must ride sub-wave 0 free
-    gated = gated.withColumn(
-        "_allowed", F.col("host") != F.lit("cold.test")
-    )
-    plan = c._budget_plan(gated, B)
-    pdf = plan.select("url_key", "host", "_allowed", "_subwave").toPandas()
-    assert len(pdf) == sum(hosts.values())  # every row assigned
-    assert (pdf[~pdf["_allowed"]]["_subwave"] == 0).all()  # blocked ride sub-wave 0
-    subs = sorted(pdf["_subwave"].unique())
-    assert subs == list(range(len(subs))) and subs[0] == 0  # contiguous
-    # per (host, sub-wave): allowed take <= ceil(B / n_slices) * n_slices
-    # (the documented approximate per-host bound of the salted default)
-    import math
-    for h, n in hosts.items():
-        if h == "cold.test":
-            continue
-        n_slices = max(1, math.ceil(n / THRESH))
-        cap = math.ceil(B / n_slices) * n_slices
-        got = pdf[(pdf["host"] == h) & pdf["_allowed"]].groupby("_subwave").size()
-        assert (got <= cap).all(), (h, got)
 
 
 def test_budget_exact_cap_under_skew(spark, tmp_path):
@@ -576,34 +521,6 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
             {r["url_key"] for r in c.seen().collect()},
         )
     assert outs["on"] == outs["off"] == outs["lazy"]
-
-
-def test_seen_join_shape_equality(spark, tmp_path):
-    """cfg.seen_join_shape 'semi' (seen ⋉ maybe-keys, then probed ⋉̸
-    hits — the seen history never shuffles) vs legacy 'anti' (maybe ⋉̸
-    seen): identical emitted rows and seen-set. Tiny bloom shards force
-    real false positives so the semi path's hits set is non-trivial,
-    and bloom_min_seen=0 keeps the prefilter (and with it the shaped
-    verify join) active from wave 0 (VERDICT r07 #2)."""
-    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
-    outs = {}
-    for shape in ("semi", "anti"):
-        cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                          bloom_prefilter=True, bloom_shards=4,
-                          bloom_min_seen=0, seen_join_shape=shape,
-                          bloom_bits_per_shard=1 << 12)  # tiny shards -> real FPs
-        c = SparkCrawler(
-            spark, cfg,
-            testkit.pages_to_spark(spark, pages_pdf),
-            testkit.robots_to_spark(spark, robots_pdf),
-            workdir=str(tmp_path / f"shape-{shape}"),
-        )
-        c.run()
-        outs[shape] = (
-            sorted(tuple(r) for r in c.results().select("Depth", "Priority", "UrlKey").collect()),
-            {r["url_key"] for r in c.seen().collect()},
-        )
-    assert outs["semi"] == outs["anti"]
 
 
 def test_seen_layout_bucketed_equality(spark, tmp_path):
@@ -1053,16 +970,14 @@ def test_pacing_enabled_smoke(spark, tmp_path):
     _assert_match(c, _oracle_run(cfg, pages_pdf, robots_pdf))
 
 
-@pytest.mark.parametrize("mode", ["iterative", "rank_once"])
-def test_midwave_resume(spark, tmp_path, mode):
+def test_midwave_resume(spark, tmp_path):
     """Interrupt AFTER a politeness-subwave checkpoint but before the
-    wave completes: resume continues from the checkpoint (the pending
-    frontier under the iterative loop; the staged budget plan under
-    rank_once) and the final output is identical to an uninterrupted
+    wave completes: resume continues from the checkpointed pending
+    frontier and the final output is identical to an uninterrupted
     budgeted run (north_star: 'resumable mid-wave')."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                      per_host_budget=3, budget_plan=mode)
+                      per_host_budget=3)
 
     full = SparkCrawler(
         spark, cfg,
@@ -1085,11 +1000,10 @@ def test_midwave_resume(spark, tmp_path, mode):
     calls = {"n": 0}
 
     def boom(*a, **k):
-        # one _fetch_and_parse per politeness sub-wave on every path
-        # (the r8 rank-once plan no longer calls _apply_budget per
-        # sub-wave): wave0 + wave1 are single sub-waves, wave2 (4
-        # urls, budget 3) checkpoints part0 after its first sub-wave;
-        # the 4th call is wave2's second sub-wave -> interrupt
+        # one _fetch_and_parse per politeness sub-wave: wave0 + wave1
+        # are single sub-waves, wave2 (4 urls, budget 3) checkpoints
+        # part0 after its first sub-wave; the 4th call is wave2's
+        # second sub-wave -> interrupt
         calls["n"] += 1
         if calls["n"] >= 4:
             raise Interrupted()
@@ -1116,6 +1030,85 @@ def test_midwave_resume(spark, tmp_path, mode):
         r["url_key"] for r in part2.seen().collect()
     }
     _assert_match(part2, _oracle_run(cfg, pages_pdf, robots_pdf))
+
+
+def test_resume_rejects_rank_once_checkpoint(spark, tmp_path):
+    """A part manifest holding a `budget_plan` table was checkpointed
+    under the removed rank-once politeness plan: resuming it must fail
+    loudly, naming the table, instead of a KeyError on the missing
+    pending slice."""
+    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
+    cfg = CrawlConfig(From=seeds, MaxDepth=1, per_host_budget=1)
+    workdir = str(tmp_path / "old")
+
+    class Interrupted(Exception):
+        pass
+
+    c = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=workdir,
+    )
+
+    def boom(frontier, d, *args, **kwargs):
+        raise Interrupted()
+
+    c._run_wave = boom
+    with pytest.raises(Interrupted):
+        c.run()
+    table = lambda t: {"path": f"{workdir}/{t}/wave=0", "files": [], "rows": 0}  # noqa: E731
+    with open(f"{workdir}/_manifests/wave-0.part0.json", "w") as f:
+        json.dump({"wave": 0, "part": 0, "committed_at": 0.0,
+                   "tables": {"results": table("results"),
+                              "budget_plan": table("budget_plan")},
+                   "metrics": {"phase": "partial", "subwave": 0}}, f)
+    c2 = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=workdir,
+    )
+    with pytest.raises(ValueError, match="budget_plan"):
+        c2.run(resume=True)
+
+
+def test_commit_wave_fsyncs_manifest_and_dir(tmp_path, monkeypatch):
+    """Durable manifest commit: the temp manifest is fsynced before
+    the rename and the manifest directory after it, for both part and
+    full commits — a power loss can then never expose a renamed,
+    empty manifest."""
+    import os
+    import stat
+
+    from crawlspark.store import SnapshotStore
+
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        events.append(("fsync", stat.S_ISDIR(st.st_mode), st.st_ino))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace",))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    store = SnapshotStore(None, str(tmp_path))
+    dir_ino = os.stat(store.manifest_dir).st_ino
+    for part in (0, None):
+        events.clear()
+        final = store.commit_wave(3, {"k": 1}, part=part)
+        assert events == [
+            ("fsync", False, os.stat(final).st_ino),
+            ("replace",),
+            ("fsync", True, dir_ino),
+        ]
+        with open(final) as f:
+            assert json.load(f)["metrics"] == {"k": 1}
 
 
 def test_single_pass_wave_plan_regression(spark, tmp_path):
@@ -1194,18 +1187,6 @@ def test_budgeted_wave_plan_single_pass(spark, tmp_path):
         if "host#" in args:
             assert "_salt" in args, plan
     assert "count(1) windowspecdefinition" not in plan, plan
-    # the r8 rank-once plan staging job: robots UDF exactly once per
-    # WAVE (the plan carries _allowed), same salted-window guarantees
-    pplan = (
-        c._budget_plan(c._gate(frontier), cfg.per_host_budget)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert pplan.count("ArrowEvalPython") == 1, pplan
-    for spec in pplan.split("windowspecdefinition(")[1:]:
-        args = spec.split(")")[0]
-        if "host#" in args:
-            assert "_salt" in args, pplan
-    assert "count(1) windowspecdefinition" not in pplan, pplan
     # blocked rows never consume a budget slot: disallow-all robots
     robots_block = robots_pdf.copy()
     robots_block["body"] = "User-agent: *\nDisallow: /\n"
@@ -1279,13 +1260,10 @@ def test_robots_local_gate_equals_join_gate(spark, tmp_path):
 def test_robots_join_gate_plan_and_override(spark, tmp_path):
     """The rules-JOIN gate (the 10^7-host scale path, VERDICT r05 #3)
     must plan as a REAL join + exactly one gate UDF — no driver
-    collect of the rules; and an explicitly passed robots_side must
-    win over the collected-rules broadcast (ADVICE r05), so callers
-    pinning the join path get the join they asked for.
+    collect of the rules; and an active collected-rules broadcast
+    overrides the join (no join in the gate plan).
     scripts/robots_join_bench.py measures this same shape at 500k
     hosts / 10^6 frontier rows (BENCH.md row)."""
-    from pyspark.sql import functions as F
-
     _JOINS = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
     pages_pdf, robots_pdf, seeds = testkit.matrix_site()
     c = SparkCrawler(
@@ -1309,19 +1287,12 @@ def test_robots_join_gate_plan_and_override(spark, tmp_path):
         workdir=str(tmp_path / "joingate2"),
     )
     assert c2._robots_bc is not None
-    # no explicit side -> collected path (no join in the plan)
+    # collected path: no join in the plan
     plan_local = (
         c2._gate(c2._initial_frontier())
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert not any(j in plan_local for j in _JOINS), plan_local
-    # explicit side -> join path, despite the active broadcast table
-    plan_over = (
-        c2._gate(c2._initial_frontier(), F.broadcast(c2.robots))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert any(j in plan_over for j in _JOINS), plan_over
-    assert plan_over.count("ArrowEvalPython") == 1, plan_over
 
 
 def test_bucketed_pages_fetch_join(spark, tmp_path):
@@ -1403,17 +1374,31 @@ def test_unknown_enum_knobs_fail_loudly(spark, tmp_path):
     configured seen_layout='Bucketed' would otherwise silently run
     the O(seen)-shuffle slices layout."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
-    pages = testkit.pages_to_spark(spark, pages_pdf)
-    robots = testkit.robots_to_spark(spark, robots_pdf)
-    for knob, bad in (
-        ("seen_join_shape", "semi-bucketed"),
-        ("seen_layout", "Bucketed"),
-        ("budget_plan", "rank-once"),
-    ):
-        cfg = CrawlConfig(From=seeds, MaxDepth=1, **{knob: bad})
-        with pytest.raises(ValueError, match=f"unknown {knob}"):
-            SparkCrawler(spark, cfg, pages, robots,
-                         workdir=str(tmp_path / f"bad-{knob}"))
+    cfg = CrawlConfig(From=seeds, MaxDepth=1, seen_layout="Bucketed")
+    with pytest.raises(ValueError, match="unknown seen_layout"):
+        SparkCrawler(spark, cfg, testkit.pages_to_spark(spark, pages_pdf),
+                     testkit.robots_to_spark(spark, robots_pdf),
+                     workdir=str(tmp_path / "bad-seen_layout"))
+
+
+def test_config_knob_set_pinned():
+    """The exact CrawlConfig field set (ROADMAP aim 2): every knob
+    must win a measured regime or go, so adding one means editing
+    this list on purpose."""
+    import dataclasses
+
+    assert {f.name for f in dataclasses.fields(CrawlConfig)} == {
+        # reference parity (config.go:11-21)
+        "Connections", "UserAgent", "RobotsUserAgent", "Include", "Exclude",
+        "From", "RespectNofollow", "MaxDepth", "WaitTime", "Timeout", "Header",
+        # engine knobs
+        "canon_mode", "shuffle_partitions", "bloom_prefilter", "seen_filter",
+        "bloom_bits_per_shard", "bloom_shards", "bloom_hashes", "bloom_min_seen",
+        "seen_layout", "seen_buckets", "per_host_budget", "fetch_broadcast_rows",
+        "hot_host_salt_threshold", "per_host_budget_exact", "pacing_enabled",
+        "detailed_metrics", "robots_local_threshold", "robots_local_max_bytes",
+        "parse_partitions", "parse_rows_per_task",
+    }
 
 
 def test_deferred_subwave_fetch_join_broadcasts_slice(spark, tmp_path):
